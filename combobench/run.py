@@ -10,6 +10,22 @@ metric of BENCHMARK.json (``--trace 0``) or every per-layer metric
 the workload's own metrics with units and sample counts, input sizes,
 host noise and any check failures. Scratch files go to ``.combobench/``
 under the repository root and are removed at the end of the run.
+
+The end-to-end metrics: ``setup_s``, the CPU time of the set-up (session
+start, inputs, warm-up); ``cpu_s_per_op``, the CPU time of the timed ops
+over their number (a build, or a query of the mix: a mean, since the mix's
+dsl, aggs and query_string queries cost 2-3x its term queries and a median
+would not see them); ``index_bytes_per_content_byte``, the size of the index
+built from the seeded corpus. CPU time is that of this process and every
+process it starts (the Spark JVM, its Python daemon and workers), less that
+of the JVM's JIT compiler threads, which is compilation in the background:
+1.5 to 4 CPU-s per build, varying from build to build, for ten builds and
+more after the JVM starts. The host is a share of a machine whose
+hypervisor steals 0 to 20 % of its CPU time in phases of minutes; wall times
+follow the steal (a 100-doc build took 3.5 s at 0.3 % and 6.9 s at 19 %),
+CPU time far less. Wall times (op p50 and tail, files/s, queries/s), CPU
+time per op with the JIT's share, and the steal per op are on the detail
+line.
 """
 
 from __future__ import annotations
@@ -117,8 +133,8 @@ def main() -> int:
 
     signal.signal(signal.SIGALRM, _on_deadline)
     signal.alarm(DEADLINE_S)
-    t0 = time.time()
     host_before = host_stamp()
+    t0, cpu0 = time.time(), tracing.tree_cpu_s()
     from combobench import workloads
 
     if args.workload not in workloads.WORKLOADS:
@@ -128,10 +144,15 @@ def main() -> int:
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
     # every file Spark, its workers and tempfile write stays in the checkout;
-    # no JVM writes its perf-data file to /tmp
+    # no JVM writes its perf-data file to /tmp. JIT compiler threads live as
+    # long as the JVM, so the CPU they used stays countable (trace.jit_cpu_s)
     os.environ["TMPDIR"] = os.environ["SPARK_LOCAL_DIRS"] = tmp
-    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        "-XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads "
+        f"-Djava.io.tmpdir={tmp}")
     os.environ["PYTHONPATH"] = ROOT
+
+    from pyspark import SparkContext
 
     from elasticsearch_analysis_combo_spark.session import get_spark
 
@@ -150,7 +171,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     session_s = time.time() - t
     tr = tracing.Tracer(spark.sparkContext, enabled=bool(args.trace))
-    ctx = workloads.Ctx(spark, tr, work, args.seed, args.seconds, t0)
+    ctx = workloads.Ctx(spark, tr, work, args.seed, args.seconds, t0, cpu0,
+                        SparkContext._gateway.proc.pid)
     try:
         res = workloads.WORKLOADS[args.workload](ctx)
     except RunTimeout:
@@ -161,19 +183,22 @@ def main() -> int:
     host_after = host_stamp()
 
     op_p50 = statistics.median(res.op_s)
+    cpu_per_op = sum(res.op_cpu_s) / len(res.op_cpu_s)
     if args.trace:
         tr.job_list = tracing.read_event_log(log_dir)
         values = workloads.layers(tr, res)
         values.update({
             "session.start_s": session_s,
             "trace.op_p50_s": op_p50,
+            "trace.cpu_s_per_op": cpu_per_op,
             "host.load1": host_before["load1"],
             "host.calib_ms": host_before["calib_ms"],
             "host.steal_frac": steal_frac(host_before, host_after),
         })
     else:
-        values = {"setup_s": res.setup_s, "op_p50_s": op_p50,
-                  "items_per_s": res.items / res.loop_s}
+        values = {"setup_s": res.setup_s, "cpu_s_per_op": cpu_per_op,
+                  "index_bytes_per_content_byte":
+                      res.named["index_bytes_per_content_byte"]["value"]}
     metrics = {}
     for m in declared:
         metrics[m["name"]] = {"value": float(values.get(m["name"], 0.0)),
@@ -187,6 +212,8 @@ def main() -> int:
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "cores": cores, "driver_memory": conf["spark.driver.memory"],
         "ops": len(res.op_s), "op_s": res.op_s, "op_p50_s": op_p50,
+        "items_per_s": res.items / sum(res.op_s),
+        "op_cpu_s": res.op_cpu_s, "cpu_s_per_op": cpu_per_op,
         "metrics": res.named, "failures": res.failures[:5], **res.info,
         "host": {"load1": [host_before["load1"], host_after["load1"]],
                  "calib_ms": [host_before["calib_ms"], host_after["calib_ms"]],
@@ -201,6 +228,8 @@ def main() -> int:
             base = json.load(f)
         traced, plain = (detail, base) if args.trace else (base, detail)
         detail["trace_overhead_s"] = traced["op_p50_s"] - plain["op_p50_s"]
+        detail["trace_overhead_cpu_s"] = (traced["cpu_s_per_op"]
+                                          - plain["cpu_s_per_op"])
     with open(os.path.join(results, f"{args.workload}-{args.seed}-t{args.trace}.json"),
               "w") as f:
         json.dump(detail, f)

@@ -120,6 +120,52 @@ def cpu_ticks() -> list[int]:
         return [int(x) for x in f.readline().split()[1:]]
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and every
+    process below it (the Spark JVM, its Python daemon and workers),
+    children already reaped included. Unlike wall time it leaves out the
+    time the hypervisor stole from the host's CPUs."""
+    parent, used = {}, {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                stat = f.read()
+        except OSError:  # exited while we looked
+            continue
+        fields = stat[stat.rindex(")") + 2:].split()
+        pid = int(name)
+        parent[pid] = int(fields[1])
+        used[pid] = sum(int(x) for x in fields[11:15])  # utime..cstime
+    tree, grew = {os.getpid()}, True
+    while grew:
+        grew = False
+        for pid, pp in parent.items():
+            if pp in tree and pid not in tree:
+                tree.add(pid)
+                grew = True
+    return sum(used[p] for p in tree if p in used) / os.sysconf("SC_CLK_TCK")
+
+
+def jit_cpu_s(pid: int) -> float:
+    """CPU seconds used so far by the JIT compiler threads of JVM ``pid``.
+    Exact only if none has exited: run the JVM with
+    ``-XX:-UseDynamicNumberOfCompilerThreads``."""
+    ticks = 0
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        # HotSpot names them "C1 CompilerThread0", cut to 15 characters
+        if "CompilerThre" in stat[stat.index("(") + 1:stat.rindex(")")]:
+            fields = stat[stat.rindex(")") + 2:].split()
+            ticks += int(fields[11]) + int(fields[12])  # utime, stime
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def steal_share(before: list[int], after: list[int]) -> float:
     """Share of the host's CPU time the hypervisor stole between two
     :func:`cpu_ticks` readings."""

@@ -38,7 +38,14 @@ from combobench.checks import (
     expect_phrase,
     expect_query_string,
 )
-from combobench.trace import Tracer, cpu_ticks, idle_s, steal_share
+from combobench.trace import (
+    Tracer,
+    cpu_ticks,
+    idle_s,
+    jit_cpu_s,
+    steal_share,
+    tree_cpu_s,
+)
 from elasticsearch_analysis_combo_spark.analysis.combo import ComboConfig
 from elasticsearch_analysis_combo_spark.analysis.udfs import build_term_stats
 from elasticsearch_analysis_combo_spark.engine import ComboSearchEngine
@@ -69,6 +76,7 @@ COMBO = ComboConfig(["whitespace", "identifier", "english"], deduplication=True)
 SIZES = {"build-combo": 100, "search-mix": 100}
 PLANTED_EXACT, PLANTED_NEAR = 6, 6
 WARMUP_DOCS = 12
+WARMUP_BUILDS = 2
 K = 10
 CURATE_OPS = ("quality_lang", "minhash_lsh", "dup_spans", "lm_perplexity",
               "repetition", "curate_chain")
@@ -83,6 +91,14 @@ class Ctx:
     seed: int
     seconds: float
     t0: float  # set-up start, before the session was created
+    cpu0: float  # process-tree CPU seconds at t0
+    jvm_pid: int
+
+    def cpu_s(self) -> tuple[float, float]:
+        """(CPU seconds of this process tree without the JIT compiler
+        threads, CPU seconds of the JIT compiler threads), used so far."""
+        jit = jit_cpu_s(self.jvm_pid)
+        return tree_cpu_s() - jit, jit
 
     def path(self, name: str) -> str:
         return os.path.join(self.work, name)
@@ -90,10 +106,13 @@ class Ctx:
 
 @dataclass
 class Result:
+    #: CPU seconds the set-up took (session, inputs, warm-up), all
+    #: processes, JIT compiler threads left out (Ctx.cpu_s)
     setup_s: float = 0.0
+    #: per timed op: wall seconds and CPU seconds as in setup_s
     op_s: list[float] = field(default_factory=list)
+    op_cpu_s: list[float] = field(default_factory=list)
     items: int = 0
-    loop_s: float = 0.0
     attempted: int = 0
     failures: list[str] = field(default_factory=list)
     info: dict = field(default_factory=dict)
@@ -136,16 +155,19 @@ def _wait_prewarm(res: Result) -> None:
 
 
 class _Background:
-    """Runs the pure-Python oracle beside the Spark set-up."""
+    """Runs the pure-Python oracle beside the Spark set-up and keeps the CPU
+    time it took, which :func:`_end_setup` leaves out of set-up."""
 
     def __init__(self, fn):
-        self.value, self.error = None, None
+        self.value, self.error, self.cpu_s = None, None, 0.0
 
         def run():
+            t = time.thread_time()
             try:
                 self.value = fn()
             except Exception as e:  # noqa: BLE001 - re-raised in result()
                 self.error = e
+            self.cpu_s = time.thread_time() - t
 
         self.thread = threading.Thread(target=run, name="combobench-oracle")
         self.thread.start()
@@ -157,40 +179,36 @@ class _Background:
         return self.value
 
 
-#: an op during which the hypervisor stole more than this share of the host's
-#: CPU time is measured again: steal comes in bursts of seconds that slow an
-#: op by far more than the stolen share, and says nothing about the program
-STEAL_MAX = 0.02
-
-
 def _timed_loop(ctx: Ctx, res: Result, step, nominal_s: float, min_ops: int,
                 unit: int = 1) -> None:
     """Closed loop, one client: ``step(i)`` runs op ``i`` and returns the
     work items it completed. The op count is fixed by ``--seconds`` and the
-    op's nominal time (4 cores, seed commit), so every commit measures the
-    same work. The count is a multiple of ``unit`` (whole query-mix cycles),
-    at least ``min_ops`` units, so medians rest on several samples. An op
-    disturbed by steal (STEAL_MAX) runs again, up to n/2 extra ops a run;
-    the least disturbed attempt of each op counts."""
+    op's nominal wall time (4 cores, seed commit), so every commit measures
+    the same work. The count is a multiple of ``unit`` (whole query-mix
+    cycles), at least ``min_ops`` units, so medians rest on several samples.
+    Each op's wall time, CPU time (:meth:`Ctx.cpu_s`), the JIT's CPU time
+    and the host's steal share while it ran are recorded."""
     n = unit * max(min_ops, round(ctx.seconds / (nominal_s * unit)))
-    retries = n // 2
-    kept = []
+    jit_s, steal = [], []
+    res.info.update(op_jit_cpu_s=jit_s, op_steal=steal)
     for i in range(n):
-        best = None
-        while True:
-            k0, t = cpu_ticks(), time.perf_counter()
-            items = step(i)
-            wall, steal = time.perf_counter() - t, steal_share(k0, cpu_ticks())
-            if best is None or steal < best[2]:
-                best = (items, wall, steal)
-            if steal <= STEAL_MAX or retries == 0:
-                break
-            retries -= 1
-        kept.append(best)
-    res.items = sum(k[0] for k in kept)
-    res.op_s = [k[1] for k in kept]
-    res.loop_s = sum(res.op_s)
-    res.info.update(op_steal=[k[2] for k in kept], op_reruns=n // 2 - retries)
+        k0, (c0, j0), t = cpu_ticks(), ctx.cpu_s(), time.perf_counter()
+        res.items += step(i)
+        res.op_s.append(time.perf_counter() - t)
+        c1, j1 = ctx.cpu_s()
+        res.op_cpu_s.append(c1 - c0)
+        jit_s.append(j1 - j0)
+        steal.append(steal_share(k0, cpu_ticks()))
+
+
+def _end_setup(ctx: Ctx, res: Result, oracle: "_Background") -> None:
+    """Set-up ends once get_spark's pre-warm threads are done and the
+    oracle has its answers; the oracle's own CPU time is not set-up."""
+    _wait_prewarm(res)
+    oracle.thread.join()
+    cpu, jit = ctx.cpu_s()  # the JVM started after cpu0: all its JIT is here
+    res.setup_s = cpu - ctx.cpu0 - oracle.cpu_s
+    res.info.update(setup_wall_s=time.time() - ctx.t0, setup_jit_cpu_s=jit)
 
 
 # -- build-combo ------------------------------------------------------------
@@ -210,27 +228,24 @@ def build_combo(ctx: Ctx) -> Result:
     generate_corpus(spark, n, ctx.seed).write.parquet(corpus_dir)
     docs = _docs(spark, corpus_dir)
     oracle = _Background(lambda: Oracle(docs, COMBO))
-    # untimed warm-up: a small build pays JVM, codegen and worker start-up,
-    # two full ones take the JIT most of the way to its steady state
-    generate_corpus(spark, WARMUP_DOCS, ctx.seed).write.parquet(
-        ctx.path("warmup-corpus"))
-    _build(ctx, ctx.path("warmup-corpus"), ctx.path("warmup-index"), "warmup")
-    for i in range(2):
+    # untimed warm-up: the first build pays codegen and worker start-up; the
+    # JIT's own threads keep compiling for ten builds and more, but they are
+    # left out of op CPU time, and the rest settles after two builds
+    for i in range(WARMUP_BUILDS):
         _build(ctx, corpus_dir, ctx.path(f"warmup-index{i}"), "warmup")
-    _wait_prewarm(res)
-    res.setup_s = time.time() - ctx.t0
+    _end_setup(ctx, res, oracle)
     o = oracle.result()
 
     dirs = []
 
     def step(i):
-        # a fresh index_dir for every build, re-runs too: an existing one
+        # a fresh index_dir for every build: an existing one
         # would resume from its checkpoints and time a no-op
         dirs.append(ctx.path(f"index{len(dirs)}"))
         _build(ctx, corpus_dir, dirs[-1], f"build{i}")
         return n
 
-    _timed_loop(ctx, res, step, nominal_s=3.5, min_ops=3)
+    _timed_loop(ctx, res, step, nominal_s=3.5, min_ops=5)
     for d in dirs:
         idx = InvertedIndex(spark, d)
         tdf = {r["term"]: (r["df"], r["cf"]) for r in idx.term_df().collect()}
@@ -238,7 +253,7 @@ def build_combo(ctx: Ctx) -> Result:
         res.check("build term_df/doc_stats", check_term_stats(tdf, dl, o))
     content_bytes = sum(len(c.encode("utf-8")) for _, c, _ in docs)
     res.info.update(docs=len(docs), content_bytes=content_bytes)
-    res.metric("build_files_per_s", res.items / res.loop_s, "files/s",
+    res.metric("build_files_per_s", res.items / sum(res.op_s), "files/s",
                len(res.op_s))
     res.metric("index_bytes_per_content_byte", du(dirs[-1]) / content_bytes,
                "ratio", 1)
@@ -362,11 +377,14 @@ def search_mix(ctx: Ctx) -> Result:
     eng = ComboSearchEngine(spark, COMBO, ctx.path("index"))
     with ctx.tracer.span("index_build", "setup"):
         eng.index(corpus)
-    for kind in QUERY_KINDS:  # untimed warm-up: first query of each kind
-        req = next(r for k, r in mix if k == kind)
-        _run_query(ctx, eng, meta_dir, kind, req, "warmup")
-    _wait_prewarm(res)
-    res.setup_s = time.time() - ctx.t0
+    content_bytes = sum(len(c.encode("utf-8")) for _, c, _ in docs)
+    res.metric("index_bytes_per_content_byte",
+               du(ctx.path("index")) / content_bytes, "ratio", 1)
+    # untimed warm-up, a whole cycle of the mix: the JIT is still compiling
+    # after one query of each kind (cheap queries then cost 30 % more CPU)
+    for i, (kind, req) in enumerate(mix):
+        _run_query(ctx, eng, meta_dir, kind, req, f"warmup{i}")
+    _end_setup(ctx, res, expected)
     exp = expected.result()
 
     got = []
@@ -385,12 +403,11 @@ def search_mix(ctx: Ctx) -> Result:
         res.check(f"query {kind} {req!r}", _check_query(kind, g, exp[i % len(mix)]))
         compared[kind] += len(g)
     res.info.update(
-        docs=len(docs),
-        content_bytes=sum(len(c.encode("utf-8")) for _, c, _ in docs),
+        docs=len(docs), content_bytes=content_bytes,
         queries_per_cycle=len(mix), results_per_kind=compared,
     )
     res.metric("query_p50_s", statistics.median(res.op_s), "s", len(res.op_s))
-    res.metric("query_per_s", res.items / res.loop_s, "queries/s", len(res.op_s))
+    res.metric("query_per_s", res.items / sum(res.op_s), "queries/s", len(res.op_s))
     res.state["hits"] = sum(len(g) for _, g in got)
     return res
 
